@@ -219,9 +219,11 @@ object RetrievalOps {
     // family's plans). Round-18 (verdict item 5): Memo.batchPersist,
     // not a bare persist() — the bare form was never unpersisted, so
     // bench passes 2+ measured a warm cache (CacheManager dedupes by
-    // canonicalized plan across invocations); the ring drains when the
-    // consuming action completes, so every invocation recomputes from
-    // parquet.
+    // canonicalized plan across invocations). The ring does NOT drain
+    // when the consuming action completes: the entry stays resident
+    // until the next invocation re-persists the same plan (dropping
+    // it first, so every invocation recomputes from parquet), four
+    // newer ringed frames evict it, or Memo.invalidate releases it.
     val perSource = Memo.batchPersist(spark, Tables.documents(spark, sfDir)
       .groupBy("source")
       .agg(sum(Exprs.tokenCount(col("text")).cast("long")).as("n_tokens")))

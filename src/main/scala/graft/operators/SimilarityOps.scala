@@ -402,6 +402,124 @@ object SimilarityOps {
     annIvfProbe(spark, sfDir, dir)
   }
 
+  // ---------------------------------------------------------------
+  // Pair routing — ONE definition of the load-spreading every
+  // candidate-pair family runs. A family supplies its bucket keys,
+  // carried columns and verify kernel; tiles, shards and their sizing
+  // live here. Every routing below keeps the plain key join's pair set
+  // (PairRoutingSpec pins the counting arguments directly).
+  // ---------------------------------------------------------------
+
+  /** Triangle-tile index of a row: g = pmod(xxhash64(id), tiles). */
+  private[graft] def tileOf(id: String, tiles: Int): Column =
+    pmod(xxhash64(col(id)), lit(tiles)).cast("int")
+
+  /** Bounded-tile (triangle) self-join of a frame carrying its tile
+    * index `g` ([[tileOf]]): a row of tile g is replicated to the tiles
+    * {(g, j): j ≥ g} on the left side `a` and {(i, g): i ≤ g} on the
+    * right side `b`, so every unordered pair of same-key rows meets in
+    * EXACTLY one (keys, ti, tj) tile — no distinct needed — and one
+    * reducer task compares at most (|bucket|/tiles)² rows. Cross-tile
+    * matches hold each pair once with roles fixed by tile, not by id
+    * (callers normalize with [[tileIds]]); same-tile matches hold both
+    * orderings and the id guard keeps one. `verify` is ANDed after the
+    * guard so the cheap guard runs first. Replication is (tiles+1)/2×
+    * of the carried rows. */
+  private[graft] def trianglePairs(routed: DataFrame, id: String,
+      carry: Seq[String], keys: Seq[String], tiles: Int,
+      verify: Column = lit(true)): DataFrame = {
+    val cs = carry.map(col)
+    val left = routed.select(cs :+ col("g").as("ti") :+
+      explode(sequence(col("g"), lit(tiles - 1))).as("tj"): _*)
+    val right = routed.select(cs :+
+      explode(sequence(lit(0), col("g"))).as("ti") :+ col("g").as("tj"): _*)
+    left.alias("a").join(right.alias("b"),
+      keysMatch("a", "b", keys :+ "ti" :+ "tj") &&
+      (col("a.ti") =!= col("a.tj") || col(s"a.$id") < col(s"b.$id")) &&
+      verify)
+  }
+
+  /** Partner-hash SHARDED key join between a BATCH-sized side `n` and
+    * a partner side `p`: each partner row keeps the one shard its id
+    * hashes to, the batch side is replicated to all `shards` shards, so
+    * every (batch, partner) pair meets in the partner's one shard — the
+    * plain key join's pair set, but a hot bucket's batch×bucket block
+    * splits across `shards` tasks. Replication multiplies only the
+    * batch-sized side (the contract of every caller). `shards ≤ 1` is
+    * the plain key join, with no replication. `within` = both sides
+    * are the same batch: keep the id-ordered half (p.id < n.id);
+    * otherwise `across` guards the disjoint roles. */
+  private[graft] def shardedPairs(batch: DataFrame, partner: DataFrame,
+      id: String, keys: Seq[String], shards: Int, within: Boolean,
+      across: Column = lit(true)): DataFrame = {
+    val cond = if (within) col(s"p.$id") < col(s"n.$id") else across
+    if (shards <= 1)
+      batch.alias("n").join(partner.alias("p"),
+        keysMatch("n", "p", keys) && cond)
+    else {
+      val n = batch.withColumn("shard",
+        explode(sequence(lit(0), lit(shards - 1))))
+      val p = partner.withColumn("shard", tileOf(id, shards))
+      n.alias("n").join(p.alias("p"),
+        keysMatch("n", "p", keys :+ "shard") && cond)
+    }
+  }
+
+  private def keysMatch(l: String, r: String, keys: Seq[String]): Column =
+    keys.map(k => col(s"$l.$k") === col(s"$r.$k")).reduce(_ && _)
+
+  /** (a_id, b_id) of a [[trianglePairs]] match, normalized low/high. */
+  private def tileIds(id: String): Seq[Column] =
+    Seq(least(col(s"a.$id"), col(s"b.$id")).as("a_id"),
+      greatest(col(s"a.$id"), col(s"b.$id")).as("b_id"))
+
+  /** (src, dst) of a [[shardedPairs]] match, normalized low/high. */
+  private def edgeIds(id: String): Seq[Column] =
+    Seq(least(col(s"n.$id"), col(s"p.$id")).as("src"),
+      greatest(col(s"n.$id"), col(s"p.$id")).as("dst"))
+
+  /** The straggler share of a bucket histogram: how many cores' worth
+    * of the total pair work the hottest bucket's c² enumeration holds,
+    * cores·max²/Σc². Tiling or sharding pays only when it exceeds 1:
+    * below that the hot bucket finishes inside one core's fair share,
+    * and splitting it is pure replication tax. */
+  private def stragglerShare(cores: Int, maxCount: Long, sumSq: Long): Double = {
+    val maxC = maxCount.toDouble
+    cores * maxC * maxC / math.max(1L, sumSq)
+  }
+
+  /** Tile count for [[trianglePairs]]: ⌈√share⌉ clamped to [1, 16] —
+    * a tile fanout t splits the hot bucket across ~t²/2 tasks. The
+    * 100× simhash probe measured max 12,600 / Σc² 1.13e10: 1 tile on
+    * 32 cores (a flat tiles = 8 measured 47.8 → 60.6 s there), 4 on
+    * 1,000 cores, where the single 1.6e8-comparison straggler splits. */
+  private[graft] def tileFanout(cores: Int, maxC: Long, sumSq: Long): Int =
+    math.min(16, math.max(1,
+      math.ceil(math.sqrt(stragglerShare(cores, maxC, sumSq))).toInt))
+
+  /** Shard count for [[shardedPairs]]: ⌈share⌉ clamped to
+    * [1, [[RoleShards]]] — shards split the hot block linearly. The 24k
+    * real corpus (max bucket 13,588 of Σc² 685.5M) gives 9 on 32 cores;
+    * flat synthetic histograms give 1, the plain key join. */
+  private[graft] def shardFanout(cores: Int, maxC: Long, sumSq: Long): Int =
+    math.min(RoleShards, math.max(1,
+      math.ceil(stragglerShare(cores, maxC, sumSq)).toInt))
+
+  /** (max c, Σc²) of a banded frame's bucket populations — the one
+    * narrow ANALYZE aggregate behind every adaptive fanout, memoized
+    * per (session, `memoKey`); [[invalidateSaturationStats]] re-arms
+    * it at the store's commit points. */
+  private def bucketMoments(spark: SparkSession, memoKey: String,
+      banded: => DataFrame, keys: String*): (Long, Long) =
+    Memo.cached(spark, memoKey) {
+      val r = banded.groupBy(keys.map(col): _*).count()
+        .agg(max("count"), sum(col("count") * col("count"))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+  private def tileFanout(spark: SparkSession, moments: (Long, Long)): Int =
+    tileFanout(spark.sparkContext.defaultParallelism, moments._1, moments._2)
+
   /** Embedding-cosine near-dup pairs: same-label vector pairs above a
     * cosine threshold. Threshold compares the *rounded integer* e4
     * value — exact in both engines, no float knife-edges in the oracle.
@@ -415,14 +533,10 @@ object SimilarityOps {
     * table) vanishes — and 100 tables × bucket collisions generate MORE
     * candidate pairs than the n²/2 it replaces. Exact low-threshold
     * all-pairs is inherently quadratic; the scalable form bounds the
-    * work per task instead of (unsoundly) skipping pairs:
-    * each vector lands in bucket g = hash(id) mod B inside its label;
-    * vector in bucket i is replicated to tiles {(i,j): j ≥ i} on the
-    * left and {(j,i): j ≤ i} on the right, so every pair meets in
-    * EXACTLY one (label, ti, tj) tile — no distinct needed. Shuffle is
-    * (B+1)× the vectors; one reducer task handles at most
-    * (|label|/B)² comparisons, so B tunes task size independently of
-    * block size (at 100 TB: B ≈ |label|/√(mem-bounded tile)).
+    * work per task instead of (unsoundly) skipping pairs: the
+    * [[trianglePairs]] routing inside each label, where B tunes task
+    * size independently of block size (at 100 TB:
+    * B ≈ |label|/√(mem-bounded tile)).
     * Sub-quadratic similarity at scale is the *approximate* path —
     * annLshTopk — which is sound at top-k's high-cosine operating
     * point, not at τ=0.25. */
@@ -454,28 +568,14 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"),
         call_function("graft_vnorm2", col("embedding")).as("n2"),
-        pmod(xxhash64(col("vec_id")), lit(B)).cast("int").as("g"))
+        tileOf("vec_id", B).as("g"))
       .localCheckpoint()
-    val left = e
-      .select(col("vec_id"), col("label"), col("v"), col("n2"),
-        col("g").as("ti"), explode(sequence(col("g"), lit(B - 1))).as("tj"))
-    val right = e
-      .select(col("vec_id"), col("label"), col("v"), col("n2"),
-        explode(sequence(lit(0), col("g"))).as("ti"), col("g").as("tj"))
-    // Cross-bucket tiles (ti < tj) hold each unordered pair exactly once
-    // with roles fixed by bucket (not by id) — keep all, normalize ids
-    // with least/greatest. Same-bucket tiles (ti = tj) hold both
-    // orderings — id order dedups them.
     val cosE4 = round(call_function("graft_cosine_pre",
       col("a.v"), col("b.v"), col("a.n2"), col("b.n2")) * 10000).cast("long")
-    left.alias("a").join(right.alias("b"),
-        col("a.label") === col("b.label") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")) &&
-        cosE4 >= 2500)
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("a.label").as("label"), cosE4.as("cos_e4"))
+    trianglePairs(e, "vec_id", Seq("vec_id", "label", "v", "n2"),
+        Seq("label"), B, cosE4 >= 2500)
+      .select(tileIds("vec_id") ++
+        Seq(col("a.label").as("label"), cosE4.as("cos_e4")): _*)
       .orderBy("a_id", "b_id")
   }
 
@@ -633,28 +733,12 @@ object SimilarityOps {
       tiles = simhashTileFanout(spark, sfDir))
 
   /** ADAPTIVE tile fanout for [[simhashDedup]]'s bucket self-join —
-    * the STRAGGLER-BOUND rule, not a flat constant: tiling replicates
-    * every bucket ~tiles/2× to split hot ones, so it only pays when
-    * the hottest bucket's c² enumeration exceeds one core's share of
-    * the total work. Σc² and max c come from one memoized bucket
-    * histogram (the 100× probe measured max 12,600 / Σc² 1.13e10 —
-    * hot, but max²/Σc² = 1.4% < 1/32, so on local[32] tiling is pure
-    * tax: a flat tiles = 8 measured 47.8 → 60.6 s; on a 1000-core
-    * cluster the same histogram yields tiles = 4 and the single
-    * 1.6e8-comparison straggler splits). tiles =
-    * ⌈√(cores·max²/Σc²)⌉ clamped to [1, 16]; output is
-    * tile-count-invariant (RewireEquivalenceSpec pins it vs naive). */
+    * the straggler-bound [[tileFanout]] rule over the (source, band,
+    * chunk) histogram; output is tile-count-invariant
+    * (RewireEquivalenceSpec pins it vs naive). */
   private def simhashTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"simhashTileFanout:$sfDir") {
-      val r = simhashBandedFrame(spark, sfDir)
-        .groupBy("source", "band", "chunk").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    tileFanout(spark, bucketMoments(spark, s"simhashTileFanout:$sfDir",
+      simhashBandedFrame(spark, sfDir), "source", "band", "chunk"))
 
   /** The banded pigeonhole frame (doc_id, source, simhash, band,
     * chunk) — shared with [[graft.CellProbe]]'s bucket-population
@@ -684,50 +768,34 @@ object SimilarityOps {
   }
 
   /** The candidate join + exact Hamming verify over a banded frame,
-    * with [[embeddingDedup]]'s bounded-tile (triangle) scheme inside
-    * each (source, band, chunk) bucket: the 7-bit chunk universe is
-    * FIXED (9 bands × ≤128 values × |sources|), so bucket population
-    * grows linearly with the corpus and an unsharded self-join
-    * serializes each hot bucket's c² enumeration on one core. Tiling
-    * by g = hash(id) mod tiles splits that across ~tiles²/2 tasks —
-    * every pair still meets in exactly one (bucket, ti, tj) tile, so
-    * the output is IDENTICAL. RewireEquivalenceSpec pins tiled ≡
+    * [[trianglePairs]]-tiled inside each (source, band, chunk) bucket:
+    * the 7-bit chunk universe is FIXED (9 bands × ≤128 values ×
+    * |sources|), so bucket population grows linearly with the corpus
+    * and an untiled self-join serializes each hot bucket's c²
+    * enumeration on one core. RewireEquivalenceSpec pins tiled ≡
     * untiled at a FORCED tiles = 4 (the adaptive fanout computes
-    * tiles = 1 at fixture scale, so the dispatch-path test alone
-    * would degenerate to the untiled join — round-12 advice);
-    * replication is ~tiles/2× of 4-long rows, noise next to the
-    * enumeration it parallelizes. `tiles = 1` is the untiled
-    * reference form. */
+    * tiles = 1 at fixture scale — round-12 advice). `tiles = 1` is the
+    * untiled reference form. */
   private[graft] def simhashPairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame = {
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("simhash"), col("band"),
-        col("chunk"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("simhash"), col("band"),
-        col("chunk"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.band") === col("b.band") &&
-        col("a.chunk") === col("b.chunk") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
-      // hamming per band-hit row (deterministic per pair) and the ≤8
-      // radius filter BEFORE the pair distinct: non-qualifying bucket
-      // collisions never reach the exchange. Cross-bucket tiles carry
-      // roles fixed by tile (not id) — normalize with least/greatest.
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
+      tiles: Int): DataFrame =
+    simhashPairsOf(banded, tiles, "simhash",
+      bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))))
+
+  /** The simhash families' shared pair stage: tiled bucket self-join
+    * carrying the `sig` column, `hamming` per band-hit row
+    * (deterministic per pair) and the ≤8 radius filter BEFORE the pair
+    * distinct, so non-qualifying bucket collisions never reach the
+    * exchange. */
+  private def simhashPairsOf(banded: DataFrame, tiles: Int, sig: String,
+      hamming: Column): DataFrame =
+    trianglePairs(banded.withColumn("g", tileOf("doc_id", tiles)), "doc_id",
+        Seq("doc_id", "source", sig, "band", "chunk"),
+        Seq("source", "band", "chunk"), tiles)
+      .select(tileIds("doc_id") :+ hamming.as("hamming"): _*)
       .filter(col("hamming") <= 8)
       .distinct()
       .select(col("a_id"), col("b_id"), col("hamming").cast("int").as("hamming"))
       .orderBy("a_id", "b_id")
-  }
 
   /** Per-doc 64-bit SimHash, computed by the native
     * `graft_simhash64` expression INSIDE the scan projection — zero
@@ -1418,8 +1486,8 @@ object SimilarityOps {
     *    or cast to double/decimal) — the verdict never depends on it.
     *
     * Scale: q8 + ‖v‖² + cell are one fused scan projection (zero
-    * pre-join shuffle); the within-cell all-pairs reuses
-    * [[embeddingDedup]]'s bounded-tile scheme — every pair meets in
+    * pre-join shuffle); the within-cell all-pairs is the
+    * [[trianglePairs]] routing — every pair meets in
     * exactly one (cell, ti, tj) tile, a reducer task compares at most
     * (|cell|/B)², so B caps task size independently of how hot a cell
     * gets (at 100 TB: raise B and/or P; cells shard by signature
@@ -1455,29 +1523,30 @@ object SimilarityOps {
     val e = q8CellFrame(spark, sfDir)
       .select(col("vec_id"),
         call_function("graft_q8pack", col("q8")).as("q8b"),
-        col("na2"), col("cell"),
-        pmod(xxhash64(col("vec_id")), lit(SemTiles)).cast("int").as("g"))
+        col("na2"), col("cell"), tileOf("vec_id", SemTiles).as("g"))
       .localCheckpoint()
-    val left = e.select(col("vec_id"), col("q8b"), col("na2"), col("cell"),
-      col("g").as("ti"), explode(sequence(col("g"), lit(SemTiles - 1))).as("tj"))
-    val right = e.select(col("vec_id"), col("q8b"), col("na2"), col("cell"),
-      explode(sequence(lit(0), col("g"))).as("ti"), col("g").as("tj"))
-    val dot = call_function("graft_q8dotb", col("a.q8b"), col("b.q8b"))
-    // tile routing is by id hash (not id order), so normalize with
-    // least/greatest; same-tile pairs carry both orderings → id order
-    left.alias("a").join(right.alias("b"),
-        col("a.cell") === col("b.cell") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")))
-      .withColumn("dot", dot)
+    q8Verified(trianglePairs(e, "vec_id", Seq("vec_id", "q8b", "na2", "cell"),
+        Seq("cell"), SemTiles), "a", "b", tauE2)
+      .select(tileIds("vec_id") ++
+        Seq(col("a.cell").as("cell"), col("dot"), q8Cos2E6): _*)
+  }
+
+  /** The q8 families' exact integer cosine verify over a joined frame
+    * with sides `l`/`r`: adds `dot` = ⟨l.q8b, r.q8b⟩ (graft_q8dotb) and
+    * keeps cos ≥ τ, tested as dot > 0 ∧ dot²·10⁴ ≥ τ_e2²·‖l‖²·‖r‖² —
+    * int64 throughout (dim ceilings: [[semanticPairs]]'s scaladoc). */
+  private def q8Verified(joined: DataFrame, l: String, r: String,
+      tauE2: Long): DataFrame =
+    joined
+      .withColumn("dot",
+        call_function("graft_q8dotb", col(s"$l.q8b"), col(s"$r.q8b")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("a.na2") * col("b.na2"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("a.cell").as("cell"), col("dot"),
-        expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6"))
-  }
+          lit(tauE2 * tauE2) * col(s"$l.na2") * col(s"$r.na2"))
+
+  /** The reported evidence floor(cos²·10⁶) of a verified tile pair. */
+  private def q8Cos2E6: Column =
+    expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6")
 
   /** MEMOIZED [[semanticPairs]] — the shared pair frame. Five queries
     * compose this stage (`semantic_dedup`, the τ=0.30/0.95 verdicts,
@@ -1505,16 +1574,12 @@ object SimilarityOps {
     * keyed on `cell` alone lands each hot cell's (batch × cell)
     * candidate block in ONE task — the round-11 CellProbe measured
     * max-cell 35,892 at the 100× probe (Σc² ×100 per ×10 data), which
-    * is ~10⁸ q8dot evaluations serialized on a single core. Sharding
-    * re-keys the join on (cell, shard): each PARTNER row keeps exactly
-    * one shard (hash of its id), the batch side is replicated to all
-    * [[RoleShards]] shards — same pair set (every pair meets in the
-    * partner's one shard), identical output, but the hot cell's block
-    * now splits across [[RoleShards]] tasks. Replication multiplies
-    * only the BATCH-sized side (the contract of every caller), so the
-    * extra shuffle is O(batch·S) narrow rows — noise next to the
-    * enumeration it parallelizes. The batch analog of
-    * [[graft.streaming.SemanticStream]]'s hot-cell replication. */
+    * is ~10⁸ q8dot evaluations serialized on a single core.
+    * [[shardedPairs]] re-keys the join on (cell, shard) and splits that
+    * block across [[RoleShards]] tasks; the extra shuffle is O(batch·S)
+    * narrow rows — noise next to the enumeration it parallelizes. The
+    * batch analog of [[graft.streaming.SemanticStream]]'s hot-cell
+    * replication. */
   private[graft] val RoleShards = 32
 
   /** ROLE-pair form of the semantic pair stage — qualifying (src, dst)
@@ -1525,29 +1590,21 @@ object SimilarityOps {
     * doubles); otherwise roles are disjoint slices, no order guard.
     * No triangular tiling: the LEFT side is batch-sized by contract,
     * so partner-hash sharding alone bounds task size (see
-    * [[RoleShards]]; SemanticDedupSpec pins sharded ≡ unsharded). */
+    * [[RoleShards]]; SemanticDedupSpec pins sharded ≡ unsharded).
+    * Signatures ride the shard replication byte-packed (guide §2.3). */
   private[graft] def semanticPairsRole(newCells: DataFrame,
       partnerCells: DataFrame, within: Boolean,
-      tauE2: Long = SemTauE2): DataFrame = {
-    val cond =
-      if (within) col("p.vec_id") < col("n.vec_id")
-      else lit(true)
-    // byte-packed signature through the shard replication (guide §2.3:
-    // the n side is replicated ×RoleShards across the exchange)
-    val n = packCells(newCells).withColumn("shard",
-      explode(sequence(lit(0), lit(RoleShards - 1))))
-    val p = packCells(partnerCells).withColumn("shard",
-      pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-    n.alias("n").join(p.alias("p"),
-        col("n.cell") === col("p.cell") &&
-        col("n.shard") === col("p.shard") && cond)
-      .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("n.na2") * col("p.na2"))
-      .select(least(col("n.vec_id"), col("p.vec_id")).as("src"),
-        greatest(col("n.vec_id"), col("p.vec_id")).as("dst"))
-  }
+      tauE2: Long = SemTauE2): DataFrame =
+    q8RoleEdges(packCells(newCells), packCells(partnerCells), Seq("cell"),
+      within, tauE2)
+
+  /** The q8 role probes' shared core: [[RoleShards]]-sharded key join,
+    * [[q8Verified]], (src, dst) edges. */
+  private def q8RoleEdges(batch: DataFrame, partner: DataFrame,
+      keys: Seq[String], within: Boolean, tauE2: Long): DataFrame =
+    q8Verified(shardedPairs(batch, partner, "vec_id", keys, RoleShards, within),
+        "n", "p", tauE2)
+      .select(edgeIds("vec_id"): _*)
 
   /** (vec_id, q8b, na2, cell) projection of a q8-cell frame — the
     * packed join currency shared by the role probes and the
@@ -1648,29 +1705,17 @@ object SimilarityOps {
     // successive nightly batches do not accumulate cache entries
     // (round-11 advice).
     val newCells = Memo.batchPersist(newCells0.sparkSession, newCells0)
-    val dotNP = call_function("graft_q8dotb", col("n.q8b"), col("p.q8b"))
     // probes are (cell, shard)-sharded like semanticPairsRole: the
     // fixed 256-cell space makes per-cell population linear in the
-    // store, and an unsharded cell-equi join serializes each hot
-    // cell's batch×cell block on one core (see RoleShards). Signatures
-    // ride the shard replication byte-packed (guide §2.3).
-    def minMatch(partner: DataFrame, cond: Column, out: String): DataFrame =
-      packCells(newCells).withColumn("shard",
-          explode(sequence(lit(0), lit(RoleShards - 1)))).alias("n")
-        .join(packCells(partner).withColumn("shard",
-            pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-          .alias("p"),
-          col("n.cell") === col("p.cell") &&
-          col("n.shard") === col("p.shard") && cond)
-        .withColumn("dot", dotNP)
-        .filter(col("dot") > 0 &&
-          col("dot") * col("dot") * 10000L >=
-            lit(SemTauE2 * SemTauE2) * col("n.na2") * col("p.na2"))
+    // store (see RoleShards)
+    def minMatch(partner: DataFrame, within: Boolean, out: String): DataFrame =
+      q8Verified(shardedPairs(packCells(newCells), packCells(partner),
+          "vec_id", Seq("cell"), RoleShards, within), "n", "p", SemTauE2)
         .groupBy(col("n.vec_id").as("new_id"))
         .agg(min(col("p.vec_id")).as(out))
-    val em = minMatch(existCells, lit(true), "exist_match")
+    val em = minMatch(existCells, within = false, "exist_match")
       .withColumnRenamed("new_id", "eid")
-    val nm = minMatch(newCells, col("p.vec_id") < col("n.vec_id"), "new_match")
+    val nm = minMatch(newCells, within = true, "new_match")
       .withColumnRenamed("new_id", "nid")
     newCells.select(col("vec_id"))
       .join(em, col("vec_id") === col("eid"), "left")
@@ -1742,16 +1787,8 @@ object SimilarityOps {
     * growth; hot clusters need tiling regardless — the measured
     * round-13 lesson). */
   private def semanticWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"semWideTileFanout:$sfDir") {
-      val r = semanticWideBandedFrame(spark, sfDir)
-        .groupBy("band", "subcell").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    tileFanout(spark, bucketMoments(spark, s"semWideTileFanout:$sfDir",
+      semanticWideBandedFrame(spark, sfDir), "band", "subcell"))
 
   /** Wide semantic near-dup pairs — the narrow family's τ split,
     * mirrored: THIS query runs at the fixture's τ=0.30 stress point
@@ -1822,69 +1859,27 @@ object SimilarityOps {
       semanticWidePairsTiled(semanticWideBandedFrame(spark, sfDir),
         semanticWideTileFanout(spark, sfDir), SemTau95))
 
-  /** The tiled wide pair stage ([[simhashWidePairsTiled]]'s routing
-    * with the q8 integer-cosine verify): triangular (ti, tj) tiles by
-    * id hash bound reducer-task size for hot subcells; RewireSpec-style
-    * identity holds by the meets-in-exactly-one-tile argument (the
-    * wide SemanticDedupSpec pins tiled ≡ naive all-pairs). */
+  /** The tiled wide pair stage: [[trianglePairs]] over (band, subcell)
+    * with the q8 integer-cosine verify; multi-band collisions collapse
+    * in the distinct (the wide SemanticDedupSpec pins tiled ≡ naive
+    * all-pairs). */
   private[graft] def semanticWidePairsTiled(banded: DataFrame,
-      tiles: Int, tauE2: Long): DataFrame = {
-    val g = pmod(xxhash64(col("vec_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("vec_id"), col("q8b"), col("na2"), col("band"),
-        col("subcell"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("vec_id"), col("q8b"), col("na2"), col("band"),
-        col("subcell"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.subcell") === col("b.subcell") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.vec_id") < col("b.vec_id")))
-      .withColumn("dot",
-        call_function("graft_q8dotb", col("a.q8b"), col("b.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("a.na2") * col("b.na2"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        col("dot"),
-        expr("dot * dot * 1000000 DIV (a.na2 * b.na2)").as("cos2_e6"))
+      tiles: Int, tauE2: Long): DataFrame =
+    q8Verified(trianglePairs(banded.withColumn("g", tileOf("vec_id", tiles)),
+        "vec_id", Seq("vec_id", "q8b", "na2", "band", "subcell"),
+        Seq("band", "subcell"), tiles), "a", "b", tauE2)
+      .select(tileIds("vec_id") ++ Seq(col("dot"), q8Cos2E6): _*)
       .distinct()
-  }
 
-  /** ROLE-pair form over the WIDE banded frames — qualifying (src,
-    * dst) edges between a BATCH-sized banded frame and a partner
-    * banded frame: (band, subcell, shard)-equi join + the exact
-    * integer verify, partner-hash sharding spreading hot subcells
-    * exactly like [[semanticPairsRole]] (same [[RoleShards]], same
-    * meets-in-the-partner's-one-shard identity). Multi-band collisions
-    * emit duplicate edges — harmless: the components merge's
-    * spanning-forest sparsifier collapses them without an exchange
-    * (round-15; callers used to pay a pair-distinct here). */
+  /** ROLE-pair form over the WIDE banded frames — [[semanticPairsRole]]
+    * keyed on (band, subcell). Multi-band collisions emit duplicate
+    * edges — harmless: the components merge's spanning-forest
+    * sparsifier collapses them without an exchange (round-15; callers
+    * used to pay a pair-distinct here). */
   private[graft] def semanticPairsRoleWide(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
-      tauE2: Long = SemTau95): DataFrame = {
-    val cond =
-      if (within) col("p.vec_id") < col("n.vec_id")
-      else lit(true)
-    val n = newBanded.withColumn("shard",
-      explode(sequence(lit(0), lit(RoleShards - 1))))
-    val p = partnerBanded.withColumn("shard",
-      pmod(xxhash64(col("vec_id")), lit(RoleShards)).cast("int"))
-    n.alias("n").join(p.alias("p"),
-        col("n.band") === col("p.band") &&
-        col("n.subcell") === col("p.subcell") &&
-        col("n.shard") === col("p.shard") && cond)
-      .withColumn("dot", call_function("graft_q8dotb", col("n.q8b"), col("p.q8b")))
-      .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * 10000L >=
-          lit(tauE2 * tauE2) * col("n.na2") * col("p.na2"))
-      .select(least(col("n.vec_id"), col("p.vec_id")).as("src"),
-        greatest(col("n.vec_id"), col("p.vec_id")).as("dst"))
-  }
+      tauE2: Long = SemTau95): DataFrame =
+    q8RoleEdges(newBanded, partnerBanded, Seq("band", "subcell"), within, tauE2)
 
   /** UNSHARDED reference form of [[semanticPairsRoleWide]] — the
     * comparison pair the wide spec pins the sharded plan against
@@ -2074,13 +2069,9 @@ object SimilarityOps {
     * round-14 real corpus's license/changelog mirror cluster — landed
     * its whole batch×bucket candidate block in ONE task
     * (`fuzzy_clusters_incremental` 12.4 s on 24k real docs vs 3.7 s on
-    * 500k synthetic). Same treatment as [[semanticPairsRole]]: each
-    * PARTNER row keeps exactly one of [[RoleShards]] shards (hash of
-    * its id), the batch side replicates to all shards, the join re-keys
-    * on (band, bucket, shard) — identical edge set (every pair meets in
-    * the partner's one shard; PolyDedupSpec pins sharded ≡ unsharded),
-    * but the hot bucket's enumeration now splits across RoleShards
-    * tasks. Replication multiplies only the batch-sized side. */
+    * 500k synthetic). Same [[shardedPairs]] routing as
+    * [[semanticPairsRole]], re-keyed on (band, bucket, shard);
+    * PolyDedupSpec pins sharded ≡ unsharded. */
   private[graft] def minhashPolyPairsRole(newBanded: DataFrame,
       partnerBanded: DataFrame, within: Boolean,
       shards: Int = RoleShards): DataFrame =
@@ -2099,42 +2090,23 @@ object SimilarityOps {
       partnerBanded: DataFrame, within: Boolean,
       shards: Int = RoleShards): DataFrame = {
     graft.GraftExtensions.register(newBanded.sparkSession)
-    val cond =
-      if (within) col("b.doc_id") < col("a.doc_id")
-      else col("a.doc_id") =!= col("b.doc_id")
-    val matches =
-      call_function("graft_sigmatch", col("a.sig"), col("b.sig"))
     // shards = 1 (flat bucket histograms — the adaptive fanout's
-    // verdict on every synthetic fixture) skips the shard columns
-    // entirely: the round-15 fixed-32 replication of the batch side
-    // cost the hard-100× nightly merge 2.3× on a corpus with NO hot
-    // bucket to spread (BENCH_100x_hard 3.7 → 8.6 s, caught by the
-    // per-round artifact diff; see [[polyRoleShardFanout]]).
-    if (shards <= 1)
-      newBanded.alias("a").join(partnerBanded.alias("b"),
-          col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") && cond)
-        .withColumn("est",
-          round(lit(1000.0) * matches / PolyPerms).cast("long"))
-        .filter(col("est") >= 500)
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("src"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("dst"))
-    else {
-      val n = newBanded.withColumn("shard",
-        explode(sequence(lit(0), lit(shards - 1))))
-      val p = partnerBanded.withColumn("shard",
-        pmod(xxhash64(col("doc_id")), lit(shards)).cast("int"))
-      n.alias("a").join(p.alias("b"),
-          col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.shard") === col("b.shard") && cond)
-        .withColumn("est",
-          round(lit(1000.0) * matches / PolyPerms).cast("long"))
-        .filter(col("est") >= 500)
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("src"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("dst"))
-    }
+    // verdict on every synthetic fixture) is the plain key join: the
+    // round-15 fixed-32 replication of the batch side cost the
+    // hard-100× nightly merge 2.3× on a corpus with NO hot bucket to
+    // spread (BENCH_100x_hard 3.7 → 8.6 s; see [[polyRoleShardFanout]]).
+    shardedPairs(newBanded, partnerBanded, "doc_id", Seq("band", "bucket"),
+        shards, within, across = col("n.doc_id") =!= col("p.doc_id"))
+      .withColumn("est", polyEstMilli("n", "p"))
+      .filter(col("est") >= 500)
+      .select(edgeIds("doc_id"): _*)
   }
+
+  /** Estimated Jaccard ·1000 of a joined poly pair: the native
+    * signature-agreement count (graft_sigmatch) over [[PolyPerms]]. */
+  private def polyEstMilli(l: String, r: String): Column =
+    round(lit(1000.0) * call_function("graft_sigmatch",
+      col(s"$l.sig"), col(s"$r.sig")) / PolyPerms).cast("long")
 
   /** UNSHARDED reference form of [[minhashPolyPairsRole]] — the
     * comparison pair PolyDedupSpec pins the sharded plan against
@@ -2184,85 +2156,43 @@ object SimilarityOps {
     minhashPolyPairsTiled(polyBandedBuckets(spark, sfDir),
       polyTileFanout(spark, sfDir))
 
-  /** Adaptive tile fanout for the poly-MinHash banded self-join — the
-    * straggler-bound sizing every other pair family already carries
-    * ([[simhashTileFanout]] / [[simhashWideTileFanout]] /
-    * [[semanticWideTileFanout]]): tiles ≈ ⌈√(cores · max_c² / Σc²)⌉
-    * from the (band, bucket) population histogram — 1 when the
-    * histogram is flat (the sf fixtures: zero overhead on the healthy
-    * path), up to 16 when one bucket dominates (the real corpus's
-    * mirror cluster). One ANALYZE aggregate per (session, store),
-    * memoized like the other fanouts. */
   /** One memoized (max c, Σc²) ANALYZE over the poly (band, bucket)
     * histogram — shared by [[polyTileFanout]] and
     * [[polyRoleShardFanout]] so the corpus is signed once per
     * (session, store) for both sizing decisions. */
-  private def polyBucketMoments(spark: SparkSession,
-      sfDir: String): (Double, Double) =
-    Memo.cached(spark, s"polyBucketMoments:$sfDir") {
-      val r = polyBandedBuckets(spark, sfDir)
-        .groupBy("band", "bucket").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      (r.getLong(0).toDouble, math.max(1L, r.getLong(1)).toDouble)
-    }
+  private def polyBucketMoments(spark: SparkSession, sfDir: String): (Long, Long) =
+    bucketMoments(spark, s"polyBucketMoments:$sfDir",
+      polyBandedBuckets(spark, sfDir), "band", "bucket")
 
-  private[graft] def polyTileFanout(spark: SparkSession, sfDir: String): Int = {
-    val (maxC, sumSq) = polyBucketMoments(spark, sfDir)
-    val cores = spark.sparkContext.defaultParallelism.toDouble
-    val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-    math.min(16, math.max(1, t))
-  }
+  /** Adaptive tile fanout for the poly-MinHash banded self-join
+    * ([[tileFanout]]): 1 on the flat sf fixtures, up to 16 when one
+    * bucket dominates (the real corpus's mirror cluster). */
+  private[graft] def polyTileFanout(spark: SparkSession, sfDir: String): Int =
+    tileFanout(spark, polyBucketMoments(spark, sfDir))
 
-  /** Adaptive shard count for the fuzzy ROLE probes — the
-    * straggler-bound argument without the square root: the hot
-    * bucket's c² work serializes on one task unless split into
-    * ≥ cores·max_c²/Σc² shards (the share of total pair work the one
-    * bucket holds, times the core count it should spread over). 1 on
-    * flat histograms (every synthetic fixture: the probe join keeps
-    * its plain (band, bucket) key and the batch side never
-    * replicates), ~9 on the 24k real corpus (max bucket 13,588 of
-    * Σc² 685.5M at 32 cores), capped at [[RoleShards]]. Same memoized
-    * ANALYZE as the tile fanout — one corpus signing buys both. */
+  /** Adaptive shard count for the fuzzy ROLE probes ([[shardFanout]]):
+    * 1 on flat histograms, where the probe join keeps its plain
+    * (band, bucket) key and the batch side never replicates. */
   private[graft] def polyRoleShardFanout(spark: SparkSession,
       sfDir: String): Int = {
     val (maxC, sumSq) = polyBucketMoments(spark, sfDir)
-    val cores = spark.sparkContext.defaultParallelism.toDouble
-    val s = math.ceil(cores * maxC * maxC / sumSq).toInt
-    math.min(RoleShards, math.max(1, s))
+    shardFanout(spark.sparkContext.defaultParallelism, maxC, sumSq)
   }
 
-  /** The tiled poly-MinHash pair stage — [[simhashWidePairsTiled]]'s
-    * triangular (ti, tj) routing with the signature-agreement
-    * estimate: every pair meets in exactly one (band, bucket, ti, tj)
-    * tile per colliding band (multi-band collisions collapse in the
-    * distinct), so a hot bucket's c² enumeration splits across
-    * tiles·(tiles+1)/2 tasks instead of serializing on one.
-    * PolyDedupSpec pins tiled ≡ untiled (forced fanouts). est per
-    * band-hit row, BEFORE the distinct (deterministic per pair — see
-    * minhashDedup's note): the distinct exchanges 3 longs per row
-    * instead of ids + two 32-long signatures. */
+  /** The tiled poly-MinHash pair stage: [[trianglePairs]] over
+    * (band, bucket) with the signature-agreement estimate; multi-band
+    * collisions collapse in the distinct. PolyDedupSpec pins tiled ≡
+    * untiled (forced fanouts). est per band-hit row, BEFORE the
+    * distinct (deterministic per pair — see minhashDedup's note): the
+    * distinct exchanges 3 longs per row instead of ids + two 32-long
+    * signatures. */
   private[graft] def minhashPolyPairsTiled(banded: DataFrame,
       tiles: Int): DataFrame = {
     graft.GraftExtensions.register(banded.sparkSession)
-    val matches = call_function("graft_sigmatch", col("a.sig"), col("b.sig"))
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"),
-        col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("sig"), col("band"), col("bucket"),
-        explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    left.alias("a").join(right.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        round(lit(1000.0) * matches / PolyPerms).cast("long")
-          .as("est_jaccard_milli"))
+    trianglePairs(banded.withColumn("g", tileOf("doc_id", tiles)), "doc_id",
+        Seq("doc_id", "sig", "band", "bucket"), Seq("band", "bucket"), tiles)
+      .select(tileIds("doc_id") :+
+        polyEstMilli("a", "b").as("est_jaccard_milli"): _*)
       .distinct()
   }
 
@@ -2742,53 +2672,20 @@ object SimilarityOps {
     * Wide universe fixes DIFFUSE population growth; tiling fixes HOT
     * CLUSTERS — a corpus can need both, so both forms carry both. */
   private def simhashWideTileFanout(spark: SparkSession, sfDir: String): Int =
-    Memo.cached(spark, s"simhashWideTileFanout:$sfDir") {
-      val r = simhashWideBandedFrame(spark, sfDir)
-        .groupBy("source", "band", "chunk").count()
-        .agg(max("count"), sum(col("count") * col("count"))).head()
-      val maxC = r.getLong(0).toDouble
-      val sumSq = math.max(1L, r.getLong(1)).toDouble
-      val cores = spark.sparkContext.defaultParallelism.toDouble
-      val t = math.ceil(math.sqrt(cores * maxC * maxC / sumSq)).toInt
-      math.min(16, math.max(1, t))
-    }
+    tileFanout(spark, bucketMoments(spark, s"simhashWideTileFanout:$sfDir",
+      simhashWideBandedFrame(spark, sfDir), "source", "band", "chunk"))
 
-  /** [[simhashPairsTiled]] for the wide 9-chunk signature: identical
-    * tile routing (every pair meets in exactly one (bucket, ti, tj)
-    * tile — RewireEquivalenceSpec pins tiled ≡ untiled ≡ naive
-    * all-pairs), hamming = Σ per-chunk popcount of the carried chunk
-    * arrays (chunks partition the bits). */
+  /** [[simhashPairsTiled]] for the wide 9-chunk signature
+    * (RewireEquivalenceSpec pins tiled ≡ untiled ≡ naive all-pairs):
+    * hamming = Σ per-chunk
+    * popcount of the carried chunk arrays (chunks partition the bits),
+    * by the native fused loop (graft.functions.ChunkHamming) — the HOF
+    * form ran interpreted per enumerated candidate, the scale currency
+    * (hard 100×: ~116M candidates → 652k pairs). */
   private[graft] def simhashWidePairsTiled(banded: DataFrame,
-      tiles: Int): DataFrame = {
-    val g = pmod(xxhash64(col("doc_id")), lit(tiles)).cast("int")
-    val left = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("chunks"), col("band"),
-        col("chunk"), col("g").as("ti"),
-        explode(sequence(col("g"), lit(tiles - 1))).as("tj"))
-    val right = banded.withColumn("g", g)
-      .select(col("doc_id"), col("source"), col("chunks"), col("band"),
-        col("chunk"), explode(sequence(lit(0), col("g"))).as("ti"),
-        col("g").as("tj"))
-    // native fused loop (graft.functions.ChunkHamming): the HOF form
-    // ran interpreted per enumerated candidate — the scale currency
-    // (hard 100×: ~116M candidates → 652k pairs)
-    val ham = call_function("graft_hamming_chunks",
-      col("a.chunks"), col("b.chunks"))
-    left.alias("a").join(right.alias("b"),
-        col("a.source") === col("b.source") &&
-        col("a.band") === col("b.band") &&
-        col("a.chunk") === col("b.chunk") &&
-        col("a.ti") === col("b.ti") && col("a.tj") === col("b.tj") &&
-        (col("a.ti") =!= col("a.tj") || col("a.doc_id") < col("b.doc_id")))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("a_id"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("b_id"),
-        ham.as("hamming"))
-      .filter(col("hamming") <= 8)
-      .distinct()
-      .select(col("a_id"), col("b_id"),
-        col("hamming").cast("int").as("hamming"))
-      .orderBy("a_id", "b_id")
-  }
+      tiles: Int): DataFrame =
+    simhashPairsOf(banded, tiles, "chunks",
+      call_function("graft_hamming_chunks", col("a.chunks"), col("b.chunks")))
 
   /** The composed nested-aggregate HOF form of the poly simhash —
     * kept as the bit-identity comparison pair (PolyDedupSpec),
@@ -2933,8 +2830,7 @@ object SimilarityOps {
     // pair), filtered BEFORE any exchange; the min aggregation is
     // duplicate-insensitive, so no pair distinct is needed at all and
     // nothing wider than 3 longs ever shuffles
-    val est = round(lit(1000.0) * call_function("graft_sigmatch",
-      col("n.sig"), col("p.sig")) / PolyPerms).cast("long")
+    val est = polyEstMilli("n", "p")
     // bucket probe → est-Jaccard verify → smallest qualifying partner
     // per new doc
     def minMatch(partner: DataFrame, cond: Column, out: String): DataFrame =
